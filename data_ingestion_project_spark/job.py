@@ -35,7 +35,7 @@ def run_ingestion_job(
     (reference behavior); tests inject a fixture payload instead.
     ``table_format="txn"`` persists through the transaction-log table
     (versioned commits + conflict detection) instead of the plain
-    parquet directory swap.
+    parquet directory append.
     """
     http_status: int | None = None
     retries_used: int | None = None
@@ -52,9 +52,9 @@ def run_ingestion_job(
     if table_format == "txn":
         from data_ingestion_project_spark.operators.upsert import upsert_txn_table
 
-        _, rows_after_dedup = upsert_txn_table(spark, df_secure, table_path, key=KEY_COLUMN)
+        rows_after_dedup = upsert_txn_table(spark, df_secure, table_path, key=KEY_COLUMN)
     else:
-        _, rows_after_dedup = upsert_parquet_table(spark, df_secure, table_path, key=KEY_COLUMN)
+        rows_after_dedup = upsert_parquet_table(spark, df_secure, table_path, key=KEY_COLUMN)
 
     return {
         "http_status": http_status,
@@ -90,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     parser.add_argument(
         "--table-format", choices=["parquet", "txn"], default="parquet",
-        help="persistence: plain parquet dir swap (reference parity) or "
+        help="persistence: plain parquet dir, one appended file per batch, or "
         "the versioned transaction-log table",
     )
     parser.add_argument(

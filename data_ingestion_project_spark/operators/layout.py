@@ -286,6 +286,20 @@ def write_zordered(
     )
 
 
+def parquet_row_counts(path: str) -> dict[str, int]:
+    """Row count of each parquet data file directly in ``path``, from
+    FOOTER metadata only — a driver-side walk, no Spark job and no data
+    pages. Files Spark's listing skips (``_``/``.``-prefixed:
+    ``_SUCCESS``, checksums, markers) are skipped here too."""
+    import pyarrow.parquet as pq
+
+    return {
+        name: pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
+        for name in os.listdir(path)
+        if name.endswith(".parquet") and not name.startswith(("_", "."))
+    }
+
+
 def parquet_file_ranges(path: str, cols: list[str]) -> list[dict]:
     """Per-file [min, max] of ``cols`` from parquet FOOTER metadata
     only (no data pages read) — exactly the stats a scan's file/row-

@@ -51,6 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_ingestion_project_spark.operators.layout import parquet_row_counts
+
 _LOG = "_txnlog"
 _DATA = "data"
 
@@ -470,18 +472,11 @@ def table_row_count(path: str, version: int | None = None) -> int:
     — a driver-side walk over the manifest's files, no Spark job and no
     data pages. The cheap answer to 'how many rows after the commit'
     (a ``df.count()`` would rescan the whole table)."""
-    import pyarrow.parquet as pq
-
     v = current_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no txn table at {path}")
-    total = 0
-    for rel in _read_manifest(path, v)["data_dirs"]:
-        d = os.path.join(path, rel)
-        for name in os.listdir(d):
-            if name.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(d, name)).metadata.num_rows
-    return total
+    dirs = _read_manifest(path, v)["data_dirs"]
+    return sum(sum(parquet_row_counts(os.path.join(path, rel)).values()) for rel in dirs)
 
 
 def history(path: str) -> list[dict]:

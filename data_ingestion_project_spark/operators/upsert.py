@@ -1,26 +1,46 @@
 """Keep-first upsert: the reference's persistence operator (U2/D1).
 
-Reference semantics (io_utils.py:16-39 in /root/reference): read the
+Reference semantics (io_utils.py:16-39 of the reference): read the
 full table, append the new batch, drop duplicate keys keeping the
 FIRST occurrence — because existing rows precede new rows in the
 concat, **existing rows win** and re-ingested keys are discarded.
 
 Spark mapping (SURVEY.md §2 D1 decision): NOT ``dropDuplicates``
 (keeps an arbitrary row per key — silently diverges). The faithful,
-scale-correct form is *insert-if-absent*:
+scale-correct form is *insert-if-absent* — Delta's ``MERGE WHEN NOT
+MATCHED THEN INSERT``: stored rows are never touched, and only the
+batch rows whose key is not stored are added. ``rows_to_insert``
+finds them with the stored table always on the streamed side:
 
-    new_only = new.join(existing, key, "left_anti")
-    result   = existing.unionByName(new_only)
+    matched = stored[key] LEFT SEMI broadcast(batch keys)
+    inserts = dedup(batch) LEFT ANTI broadcast(matched)    -- eqNullSafe
 
-which is exactly Delta's ``MERGE WHEN NOT MATCHED THEN INSERT``. The
-anti-join broadcasts the small side (a 10-row batch against a huge
-table → broadcast the batch; AQE decides from runtime sizes).
+Both broadcast sides are bounded by the batch (``matched`` holds one
+row per batch key already stored, as stored keys are unique); the
+stored key column is scanned but never broadcast, shuffled or
+collected.
 
-At 100 TB the full-table-rewrite pattern of the reference is replaced
-by: parquet table + atomic temp-dir swap here; a real deployment
-would use a transactional table format (Delta/Iceberg) where this
-operator becomes a metadata-only MERGE — the operator API is already
-shaped for that swap.
+``upsert_parquet_table`` commits a batch to a plain parquet directory
+as an append, never rewriting stored files:
+
+- **One rename.** The inserts are written as one part file into a
+  sibling temp directory; the commit is a single ``os.rename`` of that
+  file into the table directory, so a reader lists either none or all
+  of the batch.
+- **Crash.** Before the rename the table is unchanged; at most a
+  sibling ``<path>__tmp_<id>`` directory is left behind, outside the
+  table and safe to delete. After the rename the batch is committed.
+- **Replay.** A replayed batch finds all its keys stored and writes
+  nothing, so re-running a batch after any crash is safe.
+- **One writer only.** Two concurrent commits could both insert the
+  same new key; the cron job is single-flight under the
+  ``run_ingestion.sh`` lock. Multiple producers need
+  ``upsert_txn_table``'s conflict detection.
+- **Small files.** Each non-empty batch adds one small file, which
+  ``layout.compact_parquet`` rewrites into target-sized files; nothing
+  compacts automatically.
+
+The first batch, when no table exists yet, is a plain directory write.
 """
 
 from __future__ import annotations
@@ -32,32 +52,50 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.layout import parquet_row_counts
+
+
+def rows_to_insert(stored: DataFrame, new_rows: DataFrame, key: str) -> DataFrame:
+    """The batch rows whose key is not in ``stored``, one per key
+    (module doc: the semi-join-then-anti-join plan). Within-batch
+    dedup keeps an arbitrary row per key — safe ONLY because within one
+    fetched batch keys are unique; cross-batch precedence is what
+    matters and is enforced by the anti-join. The batch is assumed small
+    (one ingestion batch or micro-batch): both broadcasts are bounded
+    by it.
+
+    eqNullSafe on both joins: with a plain ==, a null key on both sides
+    compares to NULL -> "not matched" -> the null-key row re-inserts on
+    EVERY run, breaking idempotence. The transform null-gates the key,
+    this is defense in depth for tables written by other producers."""
+    kcol = F.col(f"`{key}`")  # backticks: key may be a dotted flat name
+    batch_keys = F.broadcast(new_rows.select(kcol.alias("__batch_key")))
+    matched = stored.select(kcol.alias("__stored_key")).join(
+        batch_keys, F.col("__stored_key").eqNullSafe(F.col("__batch_key")), "left_semi"
+    )
+    return new_rows.dropDuplicates([key]).join(
+        F.broadcast(matched), kcol.eqNullSafe(F.col("__stored_key")), "left_anti"
+    )
+
 
 def upsert_keep_first(existing: DataFrame | None, new_rows: DataFrame, key: str) -> DataFrame:
-    """Insert-if-absent: existing rows win; new rows deduped on key
-    (first occurrence by input order is not defined in a distributed
-    setting, so within-batch dedup uses the minimum of a deterministic
-    ordering — here any single row per key via dropDuplicates is safe
-    ONLY because within one fetched batch keys are unique; cross-batch
-    precedence is what matters and is enforced by the anti-join)."""
-    kcol = F.col(f"`{key}`")  # backticks: key may be a dotted flat name
-    new_rows = new_rows.dropDuplicates([key])
+    """Insert-if-absent as a whole table: existing rows win, plus the
+    new batch rows whose key is absent (``rows_to_insert``)."""
     if existing is None:
-        return new_rows
-    existing_keys = existing.select(kcol.alias("__existing_key"))
-    # No broadcast hint: the anti-join's build side is the EXISTING key
-    # set, which grows without bound — forcing it to broadcast would OOM
-    # the driver exactly at scale. AQE broadcasts it while it is small
-    # and switches to a shuffled anti-join once it isn't; at real scale
-    # this whole operator becomes a transactional MERGE (module doc).
-    # eqNullSafe: with a plain ==, a null key on both sides compares to
-    # NULL -> "not matched" -> the null-key row re-inserts on EVERY run,
-    # breaking idempotence. The transform null-gates the key, this is
-    # defense in depth for tables written by other producers.
-    new_only = new_rows.join(
-        existing_keys, kcol.eqNullSafe(F.col("__existing_key")), "left_anti"
-    )
-    return existing.unionByName(new_only)
+        return new_rows.dropDuplicates([key])
+    return existing.unionByName(rows_to_insert(existing, new_rows, key))
+
+
+def rows_to_append(stored: DataFrame, new_rows: DataFrame, key: str) -> DataFrame:
+    """``rows_to_insert`` conformed to the stored schema by column name:
+    stored column order and types, so every appended file agrees with
+    the footer a reader infers the table schema from. A batch column the
+    table lacks raises instead of being dropped."""
+    extra = sorted(set(new_rows.columns) - set(stored.columns))
+    if extra:
+        raise ValueError(f"batch columns not in the stored table: {extra}")
+    inserts = rows_to_insert(stored, new_rows, key)
+    return inserts.select(*[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name) for f in stored.schema])
 
 
 def atomic_overwrite_parquet(df: DataFrame, path: str) -> None:
@@ -104,40 +142,47 @@ def read_table_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def upsert_parquet_table(
-    spark: SparkSession, new_rows: DataFrame, path: str, key: str
-) -> tuple[DataFrame, int]:
-    """Full upsert cycle against a parquet table path.
+def upsert_parquet_table(spark: SparkSession, new_rows: DataFrame, path: str, key: str) -> int:
+    """Keep-first upsert of ``new_rows`` into the parquet table at
+    ``path``, committed as an append (module doc). Returns the table's
+    row count after the commit, from parquet footers — no scan.
 
-    Returns (resulting table as a fresh read, row count after dedup).
-    The new batch is materialized (cached) before the rewrite so its
-    nondeterministic crypto columns are computed exactly once.
+    The batch is materialized (cached) first so its nondeterministic
+    crypto columns are computed exactly once.
     """
-    from pyspark.sql import Observation
-
     new_rows = new_rows.cache()
     new_rows.count()  # materialize through the nondeterministic UDFs
-    existing = read_table_if_exists(spark, path)
-    merged = upsert_keep_first(existing, new_rows, key)
-    # Row count piggybacks on the write via observe (SURVEY.md §2 A1
-    # mapping) — no second scan of the table just to count it.
-    obs = Observation("upsert_metrics")
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-    # The merged plan scans the current table; the temp-dir write in
-    # atomic_overwrite_parquet executes that scan BEFORE the swap, so
-    # no self-overwrite and the data never funnels through the driver.
-    atomic_overwrite_parquet(merged, path)
-    new_rows.unpersist()
-    return spark.read.parquet(path), int(obs.get["rows"])
+    try:
+        stored = read_table_if_exists(spark, path)
+        if stored is None:
+            atomic_overwrite_parquet(new_rows.dropDuplicates([key]), path)
+        else:
+            _append_one_file(rows_to_append(stored, new_rows, key), path)
+    finally:
+        new_rows.unpersist()
+    return sum(parquet_row_counts(path).values())
 
 
-def upsert_txn_table(
-    spark: SparkSession, new_rows: DataFrame, path: str, key: str
-) -> tuple[DataFrame, int]:
+def _append_one_file(df: DataFrame, path: str) -> None:
+    """Write ``df`` as one part file into a sibling temp directory and
+    commit it with one ``os.rename`` into ``path``; an empty ``df``
+    commits nothing. The temp directory is removed either way."""
+    tmp = f"{path}__tmp_{_uuid.uuid4().hex[:8]}"
+    try:
+        df.coalesce(1).write.parquet(tmp)
+        for name, rows in parquet_row_counts(tmp).items():
+            if rows:
+                os.rename(os.path.join(tmp, name), os.path.join(path, name))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def upsert_txn_table(spark: SparkSession, new_rows: DataFrame, path: str, key: str) -> int:
     """upsert_parquet_table's transactional twin: the same keep-first
     MERGE committed through the transaction log (operators/txn_table)
     — versioned commits, no rename window, conflict detection instead
-    of lost updates. The scale path once multiple producers exist."""
+    of lost updates. The scale path once multiple producers exist.
+    Returns the row count after the commit, from parquet footers."""
     from data_ingestion_project_spark.operators import txn_table as T
 
     new_rows = new_rows.cache()
@@ -147,9 +192,7 @@ def upsert_txn_table(
     else:
         T.merge_upsert(spark, path, new_rows, key=key)
     new_rows.unpersist()
-    # footer-metadata count: no second full-table scan just to report
-    # the row count (same posture as upsert_parquet_table's observe)
-    return T.read(spark, path), T.table_row_count(path)
+    return T.table_row_count(path)
 
 
 def write_csv_parity(df: DataFrame, path: str, columns: tuple[str, ...]) -> None:

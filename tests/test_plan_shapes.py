@@ -74,6 +74,61 @@ def test_upsert_antijoin_broadcasts_existing_keys(spark, keys, tmp_path, batch1)
     assert c["n_sortmerge_joins"] == 0  # anti-join must not sort-merge
 
 
+def _jvm_children(node):
+    seq = node.children()
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _path_to(node, pred) -> list:
+    """Nodes from ``node`` down to the first descendant matching ``pred``."""
+    if pred(node):
+        return [node]
+    for child in _jvm_children(node):
+        below = _path_to(child, pred)
+        if below:
+            return [node, *below]
+    return []
+
+
+def test_upsert_commit_streams_only_the_stored_key_column(spark, keys, tmp_path, batch1, batch3_half_new):
+    """The append commit never decodes the stored table: its scan reads
+    the key column only, nothing shuffles or broadcasts that scan, and
+    the first join above it is the broadcast left-semi against the batch
+    keys that streams it — only the matches (at most one per batch key)
+    travel further. No sort-merge join anywhere."""
+    from data_ingestion_project_spark.job import run_ingestion_job
+    from data_ingestion_project_spark.operators.transforms import transform_users
+    from data_ingestion_project_spark.operators.upsert import read_table_if_exists, rows_to_append
+    from data_ingestion_project_spark.sources.users_json import users_from_json
+
+    path = str(tmp_path / "u.parquet")
+    run_ingestion_job(spark, keys, path, users=batch1)
+    new = transform_users(users_from_json(spark, batch3_half_new), keys).cache()
+    df = rows_to_append(read_table_if_exists(spark, path), new, "login.uuid")
+
+    (scan,) = [s for s in scan_info(df) if s["location"].endswith("/u.parquet")]
+    assert scan["read_schema"] == "struct<login.uuid:string>"
+    assert plan_census(df)["n_sortmerge_joins"] == 0
+
+    plan = df._jdf.queryExecution().executedPlan().executedPlan()  # AQE's initial plan
+    path_down = _path_to(
+        plan,
+        lambda n: n.getClass().getSimpleName() == "FileSourceScanExec"
+        and n.relation().location().rootPaths().head().getName() == "u.parquet",
+    )
+    assert path_down, "no scan of the stored table"
+    above_scan = path_down[-2::-1]
+    first_join = next(i for i, n in enumerate(above_scan) if n.getClass().getSimpleName().endswith("JoinExec"))
+    assert not any("Exchange" in n.getClass().getSimpleName() for n in above_scan[:first_join])
+    join = above_scan[first_join]
+    assert join.getClass().getSimpleName() == "BroadcastHashJoinExec"
+    assert join.joinType().toString() == "LeftSemi"
+    assert join.buildSide().toString() == "BuildRight"
+    streamed = path_down[-1 - first_join]  # the join's child on the way to the scan
+    assert streamed.equals(_jvm_children(join)[0])
+    new.unpersist()
+
+
 def test_asof_join_single_window_shuffle(spark):
     """The union+window as-of must cost exactly one key shuffle plus the
     output sort — a range-join formulation would add a join exchange
